@@ -55,7 +55,14 @@ object TopKTerms {
   val top30: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new TopKTerms(30))
 
-  /** Code-point (= UTF-8 binary = Spark UTF8String) string comparison. */
+  /** Code-point (= UTF-8 binary = Spark UTF8String) string comparison.
+    * Precondition: both strings are valid UTF-16, with no unpaired
+    * surrogate. A lone surrogate compares here as its code unit
+    * (U+D800–U+DFFF, below U+E000), but it has no UTF-8 encoding (Java
+    * writes it as `?`), so the two orders can disagree. Strings decoded
+    * from a Spark column never carry one — UTF8String decoding replaces
+    * malformed bytes with U+FFFD — which is what every caller feeds.
+    */
   private[functions] def codePointCompare(a: String, b: String): Int = {
     var i = 0
     var j = 0

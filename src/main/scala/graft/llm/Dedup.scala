@@ -261,6 +261,26 @@ object Dedup {
     }
   }
 
+  /** Argmax key for a best-match pick under the window ordering
+    * (sim DESC NULLS LAST, id ASC), packed into one mutable DECIMAL so
+    * `max_by(…, key)` replaces a row_number window:
+    *   key = s4 · 10²⁰ − id,
+    *   s4  = round(sim·10⁴) ∈ [−10⁴, 10⁴], or −2·10⁴ for NULL sim.
+    * Exact when sim is already rounded to 4dp (Exact.roundN), since
+    * double→decimal(6,4) then recovers it exactly; |id| < 10¹⁹ < 10²⁰/2
+    * keeps the two fields non-overlapping. Strictly monotonic in the
+    * window order, and collision-free when id is unique per group.
+    * dedup_embedding uses it; EmbeddingArgmaxSpec fuzzes it against the
+    * window pick on adversarial tie/NULL/extreme-id rows.
+    */
+  private[graft] def packedSimIdKey(sim: Column, id: Column): Column = {
+    val s4 = when(sim.isNull, lit(-20000L))
+      .otherwise((sim.cast("decimal(6,4)") * lit(10000)).cast("long"))
+    s4.cast("decimal(7,0)") *
+      lit(new java.math.BigDecimal("100000000000000000000")) -
+      id.cast("decimal(20,0)")
+  }
+
   /** Drop (keys...) posting lists with more than `bound` rows. The window
     * partitions by exactly the pair-join keys, so the df pass induces the
     * same hash partitioning the join consumes — no extra shuffle shape.
@@ -440,14 +460,14 @@ object Dedup {
       // Fresh-label doubling contracts slightly faster per round (it
       // jumps through the just-propagated pointer), but each round paid
       // a second DISK_ONLY localCheckpoint write + its job barrier.
-      // Measured on the real sf0.1 edge set (R22Probe): round count
-      // UNCHANGED (3 fused vs 3 incumbent — near-dup clusters are dense,
-      // the jump rarely fires), wall 2.53-2.67 → 2.15-2.27 s solo, label
-      // sets identical. Worst-case topology: simulation puts old-label
-      // jumping at +1 round on a 64-path (7 vs 6) — still O(log n),
-      // inside LlmPropsSpec's ≤9 pin (re-run green). Invariants are the
-      // same three the r21 comment argued: labels non-increasing, every
-      // label a same-component member id (ncomp is a neighbor's label,
+      // Measured on the real sf0.1 edge set (OPTIMIZATION_r22.md §1): round
+      // count UNCHANGED (3 fused vs 3 incumbent — near-dup clusters are
+      // dense, the jump rarely fires), wall 2.53-2.67 → 2.15-2.27 s solo,
+      // label sets identical. Worst-case topology: simulation puts old-label
+      // jumping at +1 round on a 64-path (7 vs 6) — still O(log n), inside
+      // LlmPropsSpec's ≤9 pin (re-run green). Invariants are the same three
+      // the r21 comment argued: labels non-increasing, every label a
+      // same-component member id (ncomp is a neighbor's label,
       // pcomp a label's label), and the fixpoint condition only needs
       // propagate-stability, so fixpoint ⟺ every label = component min.
       val prop = edges.join(labels, edges("db") === labels("id"))
@@ -722,9 +742,9 @@ object Dedup {
         // length, and the three slices). CollapseProject keeps a
         // non-cheap alias that is consumed more than once, so `toks` is
         // now computed once per row and the slices read the array.
-        // Measured (R22Probe, solo): warm 1.63-1.64 → 1.50-1.55 s; pair
-        // output exceptAll-identical both ways. The oracle is unchanged
-        // — same shingles, same guard, same arithmetic.
+        // Measured solo (OPTIMIZATION_r22.md §3): warm 1.63-1.64 → 1.50-1.55
+        // s; pair output exceptAll-identical both ways. The oracle is
+        // unchanged — same shingles, same guard, same arithmetic.
         val toks = col("toks")
         // greatest(…, 0): the size>=3 filter below does NOT protect this
         // expression — InferFiltersFromGenerate copies the whole shingle
@@ -760,7 +780,8 @@ object Dedup {
         // (plans/r22/dedup_ngram_shingles_{after,outer}.txt: split
         // occurrences 14 → 2). h = xxhash64(…) is never null, so the
         // isnotnull filter restores exactly explode's row set. Postings
-        // subtree solo at sf0.1: 0.75-0.80 → 0.43 s (R22Probe ngramplan).
+        // subtree solo at sf0.1: 0.75-0.80 → 0.43 s
+        // (OPTIMIZATION_r22.md §2).
         val ex = materialize(dfGuard(
           doc.select(col("doc_id"), col("lang"), col("source"),
             explode_outer(col("sh")).as("h"))
@@ -823,44 +844,28 @@ object Dedup {
           .select(col("vec_id"), col("v").as("qv")))
         val c = e.select(col("vec_id").as("prior_id"), col("v").as("cv"))
         // Best-prior pick via two built-in max_by aggregates over ONE
-        // packed decimal ordering (round 22, VERDICT r21 #3). The r21
-        // TopKNeighbors K=1 typed aggregate had O(1) buffers but ran in
-        // ObjectHashAggregateExec, which FALLS BACK to sort-based
-        // aggregation past 128 distinct keys per task
+        // packed decimal ordering ([[packedSimIdKey]]; round 22, VERDICT
+        // r21 #3). The r21 TopKNeighbors K=1 typed aggregate had O(1)
+        // buffers but ran in ObjectHashAggregateExec, which FALLS BACK to
+        // sort-based aggregation past 128 distinct keys per task
         // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
-        // and this query's ~200 broadcast queries cross it: R22Probe read
-        // numTasksFallBacked=2 (partial) / 1 (final) from the executed
-        // plan's metrics at sf0.1, i.e. every task SORTED the whole
-        // 200×candidates join output by group key. The conf is
+        // and this query's ~200 broadcast queries cross it: the executed
+        // plan's metrics read numTasksFallBacked=2 (partial) / 1 (final)
+        // at sf0.1 (OPTIMIZATION_r22.md §4), i.e. every task SORTED the
+        // whole 200×candidates join output by group key. The conf is
         // session-global and order-dependent (raising it risks OOM on the
         // grow-with-rows percentile buffers it protects), so instead the
-        // argmax becomes fixed-width: the window ordering
-        // (sim DESC NULLS LAST, prior_id ASC) is packed into one mutable
-        // DECIMAL —
-        //   packed = s4 · 10²⁰ − prior_id,
-        //   s4     = round(sim·10⁴) ∈ [−10⁴, 10⁴], or −2·10⁴ for NULL sim
-        // — exact (sim is 4dp via Exact.roundN, so double→decimal(6,4)
-        // recovers it exactly; |prior_id| < 10¹⁹ < 10²⁰/2 keeps the two
-        // fields non-overlapping), strictly monotonic in the window
-        // order, and collision-free (prior_id is unique per group). The
-        // two max_by(…, packed) aggregates are DeclarativeAggregates on
-        // all-mutable buffers, so the plan is a codegen'd
-        // HashAggregateExec — NO fallback threshold at ANY group count,
-        // no per-row typed-encoder work, and max_by(sim, packed) returns
-        // NULL for a NULL-sim winner, the old ns-flag contract. Parity:
-        // EmbeddingArgmaxSpec fuzzes the packed pick against the r21
-        // aggregate and the r20 window on adversarial tie/NULL fixtures;
-        // oracle unchanged (Verify 201/201). prior_id is non-null by
-        // construction: a NULL vec_id fails the `prior_id < vec_id` join
-        // predicate.
-        val s4 = when(col("sim").isNull, lit(-20000L))
-          .otherwise((col("sim").cast("decimal(6,4)") * lit(10000)).cast("long"))
-        val packed = (s4.cast("decimal(7,0)") *
-          lit(new java.math.BigDecimal("100000000000000000000")) -
-          col("prior_id").cast("decimal(20,0)")).as("packed")
+        // argmax becomes fixed-width. The two max_by(…, packed)
+        // aggregates are DeclarativeAggregates on all-mutable buffers, so
+        // the plan is a codegen'd HashAggregateExec — NO fallback
+        // threshold at ANY group count, no per-row typed-encoder work,
+        // and max_by(sim, packed) returns NULL for a NULL-sim winner, the
+        // old ns-flag contract. Oracle unchanged (Verify 201/201).
+        // prior_id is non-null by construction: a NULL vec_id fails the
+        // `prior_id < vec_id` join predicate.
         q.join(c, col("prior_id") < col("vec_id"))
           .withColumn("sim", Exact.roundN(Similarity.cosine(col("qv"), col("cv")), 4))
-          .withColumn("packed", packed)
+          .withColumn("packed", packedSimIdKey(col("sim"), col("prior_id")))
           .groupBy(col("vec_id"))
           .agg(max_by(col("prior_id"), col("packed")).as("best_prior_id"),
             max_by(col("sim"), col("packed")).as("sim"))

@@ -96,22 +96,21 @@ object Similarity {
     // (no centroids ⇒ no assigned rows — the cross join against an
     // EMPTY 8-row table emitted nothing; the 1-row empty-array version
     // would emit every vector). Value parity pinned by IvfParitySpec
-    // (row-for-row vs the r20 window body) and the R21Probe
-    // aggregate-vs-HOF differential (diff = 0); plan by PlanSpec.
+    // (row-for-row vs the r20 window body) and the aggregate-vs-HOF
+    // differential (diff = 0, OPTIMIZATION_r21.md §1); plan by PlanSpec.
     val centsArr = broadcast(cents
       .agg(sort_array(collect_list(struct(col("cent_id"), col("cent")))).as("cents")))
     // Round 22 (VERDICT r21 #5) — a STATIC-unrolled argmax was built,
     // measured, and REJECTED; this HOF stays. The candidate replaced the
     // interpreted `aggregate()` loop with 8 codegen'd packed-long
     // columns + greatest() (p_i = s4_i·16 + (15−i)); STANDALONE it was
-    // 40% faster on the assignment pass (R22Probe kmeansprof x1024:
-    // 2.58-2.65 → 1.53-1.61 s, parity diff 0). COMPOSED into ivfTop5 it
-    // regressed the full query ~25×: top5 at x1024 5.6-7.4 → 134-140 s;
-    // sim_ann_ivf x2048/x4096 247/485 s vs r21's 17.3 s (R22Probe
-    // ivfbisect; the aborted x4096 cells are quoted in
-    // OPTIMIZATION_r22.md). Root cause, read from the physical plans:
-    // the downstream cell===ccell equi-join infers isnotnull(cell), and
-    // filter pushdown INLINES it through the projection into THIS
+    // 40% faster on the assignment pass (x1024: 2.58-2.65 → 1.53-1.61 s,
+    // parity diff 0). COMPOSED into ivfTop5 it regressed the full query
+    // ~25×: top5 at x1024 5.6-7.4 → 134-140 s; sim_ann_ivf x2048/x4096
+    // 247/485 s vs r21's 17.3 s (OPTIMIZATION_r22.md §7, which also
+    // quotes the aborted x4096 cells). Root cause, read from the physical
+    // plans: the downstream cell===ccell equi-join infers isnotnull(cell),
+    // and filter pushdown INLINES it through the projection into THIS
     // BroadcastNestedLoopJoin's condition (it references both join
     // sides — emb and cents — so it can sink no further); there the
     // unrolled 8-cosine tree is one enormous predicate whose per-pair

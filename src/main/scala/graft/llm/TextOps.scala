@@ -467,9 +467,9 @@ object TextOps {
         // to find the codepoint offset — O(len) per call, O(len²) per
         // document. Splitting once into a codepoint array and zipping
         // three slices is O(len): measured 4.3-6.0 s → 1.9-2.3 s for the
-        // corpus-wide gram aggregation at sf0.1 (R21Probe), gram-for-gram
-        // identical including non-BMP emoji (split("") keeps surrogate
-        // pairs whole — probed on the unicode degenerate texts; a
+        // corpus-wide gram aggregation at sf0.1 (OPTIMIZATION_r21.md §6),
+        // gram-for-gram identical including non-BMP emoji (split("") keeps
+        // surrogate pairs whole — probed on the unicode degenerate texts; a
         // per-element split form was also tried and is the known
         // ProjectCollapse trap: ~70 s, re-split per element). Texts
         // shorter than 3 codepoints keep the substring semantics (the

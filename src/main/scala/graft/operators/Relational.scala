@@ -195,7 +195,8 @@ object Relational {
         // 6+12 levels cut that to 18. A pointer-doubling single
         // recursion was measured SLOWER (join+explode in the loop body
         // outweighs the fewer iterations: 1.9-3.5 s vs 0.7-0.9 s).
-        // Full-query warm wall 0.92-1.12 s → 0.63-0.70 s (R21Probe);
+        // Full-query warm wall 0.92-1.12 s → 0.63-0.70 s
+        // (OPTIMIZATION_r21.md §5);
         // the oracle keeps the plain linear recursion — results are
         // identical (Verify 201/201).
         s.sql("""WITH RECURSIVE ka(a) AS (

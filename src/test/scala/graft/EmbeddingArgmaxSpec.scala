@@ -1,5 +1,6 @@
 package graft
 
+import graft.llm.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,26 +11,21 @@ import org.apache.spark.sql.functions._
   * (−2·10⁴ for NULL sim). The risky part is the PACKING — decimal
   * exactness of the 4dp sim, the NULL sentinel, monotonicity in
   * (sim DESC NULLS LAST, prior_id ASC), and no field overlap at extreme
-  * prior ids — so this suite fuzzes the packed reduction against a
-  * row_number window reference on constructed adversarial rows. The
+  * prior ids — so this suite fuzzes the reduction over the production
+  * key, `Dedup.packedSimIdKey`, against a row_number window reference on
+  * constructed adversarial rows. The
   * query-level wiring (join, cosine, output columns) is pinned by
   * IvfParitySpec's dedup_embedding test against the r20 window body on
   * the real fixtures, and the no-fallback plan shape by PlanSpec.
   */
 class EmbeddingArgmaxSpec extends SparkSpec {
 
-  /** The registered query's packed reduction, restated at the seam. */
-  private def packedPick(rows: DataFrame): DataFrame = {
-    val s4 = when(col("sim").isNull, lit(-20000L))
-      .otherwise((col("sim").cast("decimal(6,4)") * lit(10000)).cast("long"))
-    val packed = s4.cast("decimal(7,0)") *
-      lit(new java.math.BigDecimal("100000000000000000000")) -
-      col("prior_id").cast("decimal(20,0)")
-    rows.withColumn("packed", packed)
+  /** The registered query's packed reduction over the production key. */
+  private def packedPick(rows: DataFrame): DataFrame =
+    rows.withColumn("packed", Dedup.packedSimIdKey(col("sim"), col("prior_id")))
       .groupBy(col("vec_id"))
       .agg(max_by(col("prior_id"), col("packed")).as("best_prior_id"),
         max_by(col("sim"), col("packed")).as("sim"))
-  }
 
   /** The r20 window reference: rn=1 under (sim DESC NULLS LAST, prior ASC). */
   private def windowPick(rows: DataFrame): DataFrame = {

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, Explode, GreaterThan, Literal, Size}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
 /** Physical-plan assertions (SURVEY §4): the scale properties the engine
   * RELIES on must be visible in the plan, not assumed — predicate pushdown
   * to the parquet scan, column pruning, broadcast joins for dimensions,
@@ -265,7 +270,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("profile top-k queries reduce map-side (no vocabulary-wide window)") {
-    // Round-16 scaling-harness finding (LlmScalingBench, BASELINE.md r16):
+    // Round-16 scaling-harness finding (documents family, BASELINE.md r16):
     // the profile top-N window — row_number over Window.partitionBy(lang)
     // on corpus-wide (lang, gram|term) counts — funnels the entire
     // vocabulary into ≤#languages sort tasks (×8→×64 corpus: 35.7× wall
@@ -300,7 +305,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_embedding keeps the cosine out of the join and pre-limits the window") {
-    // Round-16 scaling-harness finding (EmbeddingsScalingBench, BASELINE.md
+    // Round-16 scaling-harness finding (embeddings family, BASELINE.md
     // r16): dedup_embedding stayed flat through ×256 (512k vectors). The
     // plan properties that make that true — and that this ratchet pins:
     // (1) the 200-query side is the BNL build side with its vec_id < 200
@@ -556,6 +561,73 @@ class PlanSpec extends SparkSpec {
       s"vector max re-evaluated inside the lambda (expected 1 array_max):\n$p")
     assert("transform\\(".r.findAllIn(p).size == 1,
       s"quantized array rebuilt per consumer (expected 1 transform):\n$p")
+  }
+
+  /** Optimized plans of every Generate `name` builds, including the ones
+    * inside subtrees it materializes (absent from its own plan).
+    */
+  private def builtGenerates(name: String): Seq[Generate] =
+    SparkSpec.plansOptimizedDuring(spark) {
+      Registry.queries(name)(spark, SparkSpec.freshDir(sf0001)).queryExecution.optimizedPlan
+    }.flatMap(_.collect { case g: Generate => g }).distinct
+
+  test("explode_outer dedup postings evaluate split/shingles once, no generator filter below") {
+    // Round 22 (OPTIMIZATION_r22.md §2): a plain explode lets
+    // InferFiltersFromGenerate copy the generator's child into
+    // `size(…) > 0 AND isnotnull(…)` conjuncts below the Generate — an
+    // interpreted Filter (the HOF child defeats codegen) that re-evaluated
+    // array_distinct(split(text)), and for dedup_ngram_jaccard the whole
+    // shingle build, per row. The rule skips outer generates, so these
+    // sites use explode_outer plus an isnotnull filter above; a Spark
+    // upgrade that infers filters for outer generates would bring the
+    // duplication back silently. (Spark 4.1 also infers only for an
+    // attribute input, so tokenPairs' inline split would not regress
+    // under a plain explode today; its pin guards the next upgrade.) Two
+    // of the three subtrees are materialized, hence the built-plan walk.
+    for ((name, evaluation) <- Seq(
+        "dedup_jaccard_pairs" -> "split\\(",
+        "dedup_minhash_verified" -> "split\\(",
+        "dedup_ngram_jaccard" -> "transform\\(zip_with\\(")) {
+      val explodes = builtGenerates(name).filter(_.generator.isInstanceOf[Explode])
+      assert(explodes.size == 1, s"$name: expected one explode Generate:\n$explodes")
+      val g = explodes.head.treeString
+      assert(evaluation.r.findAllIn(g).size == 1,
+        s"$name: the generator input is evaluated more than once:\n$g")
+      val inferred = explodes.head.child.collect { case f: Filter => f.condition }
+        .filter(_.exists {
+          case GreaterThan(Size(_, _), Literal(0, _)) => true
+          case _ => false
+        })
+      assert(inferred.isEmpty, s"$name: generator-inferred filter below the Generate:\n$g")
+    }
+  }
+
+  test("kmeans and label-centroid posexplode(emb) keep the emb cast out of interpreted filters") {
+    // A plain posexplode over the projected `emb` attribute gets the
+    // inferred `size(emb) > 0 AND isnotnull(emb)` filter, which pushdown
+    // inlines into the scan as a second cast of `embedding`. Today that
+    // filter runs inside whole-stage codegen, whose common-subexpression
+    // elimination shares the cast (VERDICT r22 #6). Pinned so a heavier
+    // generator child cannot silently recreate the interpreted-filter
+    // duplication the dedup postings had (see the explode_outer ratchet).
+    def interpreted(p: SparkPlan, inCodegen: Boolean): Seq[FilterExec] = p match {
+      case a: AdaptiveSparkPlanExec => interpreted(a.executedPlan, false)
+      case s: QueryStageExec => interpreted(s.plan, false)
+      case w: WholeStageCodegenExec => interpreted(w.child, true)
+      case i: InputAdapter => interpreted(i.child, false)
+      case f: FilterExec => (if (inCodegen) Nil else Seq(f)) ++ interpreted(f.child, inCodegen)
+      case other => other.children.flatMap(interpreted(_, inCodegen))
+    }
+    for (name <- Seq("sim_kmeans_step", "sim_label_centroid")) {
+      val df = Registry.queries(name)(spark, sf0001)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      val castFilters = interpreted(p, false).filter(_.condition.exists {
+        case c: Cast => c.child.references.exists(a => a.name == "embedding" || a.name == "emb")
+        case _ => false
+      })
+      assert(castFilters.isEmpty, s"$name: interpreted Filter over the emb cast:\n$p")
+    }
   }
 
   test("no query plans an unintentional cartesian product") {
