@@ -63,14 +63,6 @@ object TopKNeighbors {
   /** K=5 — the exact/IVF/LSH top-5 consumers. */
   val top5: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new TopKNeighbors(5))
-  /** K=1 — the argmax consumers. No registered query uses it since
-    * round 22 (dedup_embedding's argmax became a packed-decimal max_by
-    * to escape the ObjectHashAggregate 128-key sort fallback; the IVF
-    * assignment is a per-row HOF argmax) — kept for probes and as the
-    * ready-made K=1 instance for a future <128-groups-per-task consumer.
-    */
-  val top1: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(new TopKNeighbors(1))
   /** K=10 — scan_sample_stratified's per-language LCG sample. */
   val top10: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new TopKNeighbors(10))

@@ -212,6 +212,15 @@ object Dedup {
   val DfBound: Long =
     sys.env.get("SPARK_GRAFT_DF_BOUND").map(_.toLong).getOrElse(1000L)
 
+  /** The reliable-checkpoint root [[materialize]] writes under, if any:
+    * session conf `spark.graft.reliableCheckpointDir`, else env
+    * `SPARK_GRAFT_RELIABLE_CHECKPOINT`; an empty value means none.
+    */
+  private def reliableCheckpointDir(spark: org.apache.spark.sql.SparkSession): Option[String] =
+    spark.conf.getOption("spark.graft.reliableCheckpointDir")
+      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"))
+      .filter(_.nonEmpty)
+
   /** Materialization primitive for the multi-consumer dedup subtrees
     * ([[tokenPairs]], dedup_ngram_jaccard's postings, each
     * [[connectedComponents]] round). Default is `localCheckpoint` at
@@ -236,10 +245,7 @@ object Dedup {
     */
   private[graft] def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val dir = spark.conf.getOption("spark.graft.reliableCheckpointDir")
-      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"))
-      .filter(_.nonEmpty)
-    dir match {
+    reliableCheckpointDir(spark) match {
       case Some(d) =>
         // setCheckpointDir appends a UUID subdir; only (re)set when the
         // current dir isn't already under the configured root.
@@ -383,10 +389,7 @@ object Dedup {
       maxEntries = 8, alive = k => !k._1.sparkContext.isStopped)
 
   private[graft] def tokenPairsFor(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val ckptDir = s.conf.getOption("spark.graft.reliableCheckpointDir")
-      .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"))
-      .filter(_.nonEmpty)
-    tokenPairsCache.getOrElseUpdate((s, d, DfBound, ckptDir))(
+    tokenPairsCache.getOrElseUpdate((s, d, DfBound, reliableCheckpointDir(s)))(
       tokenPairs(Tables.documents(s, d)))
   }
 

@@ -50,11 +50,6 @@ object Similarity {
       !isnan(na) && !isnan(nb) && na > 0d && nb > 0d, dot / (na * nb))
   }
 
-  /** IVF nprobe=1 top-5 per query (vec_id < 10): deterministic seed
-    * centroids (vec_id < 8), nearest-centroid assignment, probe only the
-    * query's own cell. Shared by `sim_ann_ivf` (output) and
-    * `sim_ann_recall` (evaluation against the exact top-5).
-    */
   /** Nearest-centroid assignment (seed centroids vec_id < 8, rounded
     * cosine, centroid-id tie-break): (vec_id, emb, cell). Shared by the
     * IVF probe and the k-means recompute step.
@@ -133,6 +128,11 @@ object Similarity {
       .select(col("vec_id"), col("emb"), best("cid").as("cell"))
   }
 
+  /** IVF nprobe=1 top-5 per query (vec_id < 10): deterministic seed
+    * centroids (vec_id < 8), nearest-centroid assignment, probe only the
+    * query's own cell. Shared by `sim_ann_ivf` (output) and
+    * `sim_ann_recall` (evaluation against the exact top-5).
+    */
   private def ivfTop5(s: SparkSession, d: String): DataFrame = {
     val assigned = ivfAssigned(s, d)
     val q = broadcast(assigned.filter(col("vec_id") < 10)

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   *      pushed down to the database),
   *   2. read only newer rows from the source (filter pushed into the scan),
   *   3. optional transform,
-  *   4. idempotent keyed MERGE upsert of the delta.
+  *   4. idempotent keyed MERGE upsert of the delta, re-run on a
+  *      concurrent-writer race.
   *
   * Re-running with no new source rows is a no-op; re-running after a crash
   * mid-merge re-MERGEs the same keys — the pipeline is idempotent end to
@@ -35,7 +36,7 @@ object IncrementalPipeline {
     val delta = transform(wm.fold(source)(w => source.filter(col(watermarkCol) > w)))
     val n = delta.count()
     if (n > 0) {
-      JdbcUpsert.upsertViaStaging(delta, url, table, keys, stagingColumnTypes)
+      JdbcUpsert.upsertViaStagingRetry(delta, url, table, keys, stagingColumnTypes)
     }
     RunStats(wm, n)
   }

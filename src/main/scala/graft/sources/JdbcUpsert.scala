@@ -8,28 +8,25 @@ import org.apache.spark.sql.functions._
 /** JDBC source/sink with idempotent keyed upsert and incremental watermark
   * loads — the reference pipeline's core capability (SURVEY §1.2, §3.1)
   * re-expressed for Spark. Spark's native JDBC writer has no upsert mode,
-  * so two strategies are provided:
+  * so every writer goes through one protocol behind one entry point,
+  * [[JdbcUpsert.upsertViaStagingRetry]]: Spark writes the delta to a
+  * staging table with its distributed JDBC writer (every executor streams
+  * its partitions concurrently), the database dedups it and runs ONE
+  * set-based upsert, and both temps are dropped. At 100 TB the expensive
+  * half (the write) is fully parallel and the upsert is the DB's own bulk
+  * operator — no per-row round trips. A concurrent-writer race re-runs
+  * the whole attempt, a bounded number of times.
   *
-  *  1. [[upsertViaStaging]] — the scale path. Spark writes the delta to a
-  *     staging table with its distributed JDBC writer (every executor
-  *     streams its partitions concurrently), then ONE set-based `MERGE`
-  *     runs inside the database. At 100 TB the expensive half (the write)
-  *     is fully parallel and the merge is the DB's own bulk operator —
-  *     no per-row round trips.
-  *  2. [[upsertPerPartition]] — `foreachPartition` with batched
-  *     UPDATE-then-INSERT over one connection per partition. Works against
-  *     databases without MERGE/staging DDL rights; still distributed
-  *     (driver never sees the rows).
-  *
-  * Both are idempotent on the key: applying the same delta twice equals
-  * applying it once (asserted in JdbcUpsertSpec).
+  * Idempotent on the key: applying the same delta twice equals applying
+  * it once (asserted in JdbcUpsertSpec).
   */
-/** Dialect seam for [[JdbcUpsert.upsertViaStaging]] (VERDICT r12 #3): the
+/** Dialect seam for [[JdbcUpsert.upsertViaStagingRetry]] (VERDICT r12 #3): the
   * statement TEXT differs per database — ANSI `MERGE` (Derby, Postgres 15+,
   * SQL Server, Oracle) vs MySQL's `INSERT … ON DUPLICATE KEY UPDATE`
   * (MySQL has no MERGE at all, and it is the reference genre's actual
   * target DB) — while the execution protocol (distributed staging write →
   * materialized whole-row dedup → one set-based upsert → drop) is shared.
+  * The dialect is chosen from the JDBC URL ([[JdbcUpsert.dialectFor]]).
   * Each dialect is PURE text generation, unit-tested for statement shape
   * in JdbcUpsertSpec; only the ANSI arm can run end-to-end here (embedded
   * Derby is the sole database in the container), so the MySQL arm is
@@ -120,7 +117,7 @@ sealed trait UpsertDialect {
   /** In-order statements to run AFTER Spark has written `staging`:
     * materialize the whole-row dedup into `deduped`, then one set-based
     * upsert into `table`. Cleanup (dropping both temps) is shared protocol,
-    * not dialect text — see [[JdbcUpsert.upsertViaStaging]].
+    * not dialect text — see [[JdbcUpsert.upsertViaStagingRetry]].
     */
   def upsertStatements(table: String, staging: String, deduped: String,
       cols: Seq[String], keys: Seq[String]): Seq[String]
@@ -236,7 +233,16 @@ object JdbcUpsert {
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
     }
 
-  /** Scale path: distributed staging write + one set-based MERGE.
+  /** The upsert dialect for a JDBC URL: MySQL and MariaDB have no MERGE,
+    * every other database gets the ANSI text.
+    */
+  private[graft] def dialectFor(url: String): UpsertDialect = {
+    val u = url.toLowerCase(java.util.Locale.ROOT)
+    if (u.startsWith("jdbc:mysql:") || u.startsWith("jdbc:mariadb:")) MySqlUpsertDialect
+    else AnsiMergeDialect
+  }
+
+  /** One attempt: distributed staging write + one set-based upsert.
     *
     * `stagingColumnTypes` maps to Spark's `createTableColumnTypes` — pass
     * explicit SQL types for EVERY StringType column in the frame (e.g.
@@ -248,11 +254,11 @@ object JdbcUpsert {
     * dialects that map strings to a comparable type (VARCHAR/TEXT) the
     * override is unnecessary.
     *
-    * The upsert statement text comes from `dialect` (default
-    * [[AnsiMergeDialect]], the arm Derby executes end-to-end; pass
-    * [[MySqlUpsertDialect]] against MySQL — statement-shape-tested only in
-    * this container). The upsert runs from a DEDUPED copy of staging, not
-    * the raw table (VERDICT r08 #4): Spark's JDBC writer is not
+    * The upsert statement text comes from [[dialectFor]]`(url)`
+    * ([[AnsiMergeDialect]], the arm Derby executes end-to-end, or
+    * [[MySqlUpsertDialect]] for a MySQL/MariaDB URL — statement-shape-tested
+    * only in this container). The upsert runs from a DEDUPED copy of
+    * staging, not the raw table (VERDICT r08 #4): Spark's JDBC writer is not
     * transactional per task — a retried or speculated task re-appends its
     * partition, leaving exact full-row duplicates in staging, and a MERGE
     * whose source matches one target row twice is a cardinality violation
@@ -269,9 +275,8 @@ object JdbcUpsert {
     * tables; the copy is of the DELTA only (never the target), one
     * in-database bulk pass, so the scale story is unchanged.
     */
-  def upsertViaStaging(df: DataFrame, url: String, table: String, keys: Seq[String],
-      stagingColumnTypes: Option[String] = None,
-      dialect: UpsertDialect = AnsiMergeDialect): Unit = {
+  private def upsertViaStaging(df: DataFrame, url: String, table: String,
+      keys: Seq[String], stagingColumnTypes: Option[String]): Unit = {
     // Unique per-run staging name: two concurrent upserts to the same target
     // (overlapping scheduled runs, two streams) must not clobber each
     // other's staging data mid-MERGE (ADVICE r01).
@@ -280,7 +285,7 @@ object JdbcUpsert {
       .format("jdbc").option("url", url).option("dbtable", staging)
     stagingColumnTypes.fold(w)(t => w.option("createTableColumnTypes", t)).save()
     val deduped = s"${staging}_d"
-    val stmts = dialect.upsertStatements(
+    val stmts = dialectFor(url).upsertStatements(
       table, staging, deduped, df.columns.toSeq, keys)
     withConnection(url) { c =>
       var failure: Throwable = null
@@ -351,7 +356,10 @@ object JdbcUpsert {
     }
   }
 
-  /** Concurrent-writer wrapper around [[upsertViaStaging]]: bounded retry of
+  /** Retries of a transient race before [[upsertViaStagingRetry]] rethrows. */
+  private val MaxRetries = 3
+
+  /** The one upsert entry point: [[upsertViaStaging]] with a bounded retry of
     * the WHOLE stage-and-merge on the transient race states above. Safe
     * because the staging upsert is idempotent on the key by construction —
     * the loser's MERGE rolled back atomically, and on re-run the racing key
@@ -359,7 +367,7 @@ object JdbcUpsert {
     * (NULL keys, conflicting deltas, schema errors, post-commit cleanup
     * failures) is NOT in the transient set and still fails loudly on first
     * contact; a persistently-violated foreign UNIQUE constraint exhausts
-    * `maxRetries` and rethrows. Each retry backs off exponentially with
+    * [[MaxRetries]] and rethrows. Each retry backs off exponentially with
     * jitter (50·2^attempt ms + 0-50 ms) so colliding writers don't re-run
     * the full distributed staging write in lockstep until the budget is
     * gone. Returns the number of retries consumed (0 = clean first pass)
@@ -383,17 +391,16 @@ object JdbcUpsert {
     */
   def upsertViaStagingRetry(df: DataFrame, url: String, table: String,
       keys: Seq[String], stagingColumnTypes: Option[String] = None,
-      dialect: UpsertDialect = AnsiMergeDialect, maxRetries: Int = 3,
       onLeak: String => Unit = logLeakedStaging): Int = {
     var attempt = 0
     var done = false
     val reportedLeaks = scala.collection.mutable.Set.empty[String]
     while (!done) {
       try {
-        upsertViaStaging(df, url, table, keys, stagingColumnTypes, dialect)
+        upsertViaStaging(df, url, table, keys, stagingColumnTypes)
         done = true
       } catch {
-        case e: Throwable if attempt < maxRetries && isTransientRace(e) =>
+        case e: Throwable if attempt < MaxRetries && isTransientRace(e) =>
           // About to swallow `e` (if the retry succeeds) — surface any
           // leaked staging tables riding it as suppressed cleanup
           // failures first (ADVICE r15). Deduped across attempts
@@ -416,11 +423,6 @@ object JdbcUpsert {
     log.warn(s"staging table $table leaked: its post-rollback DROP failed " +
       "and the failed attempt is being retried — drop it manually")
 
-  /** Every staging table named by a [[StagingCleanupException]] anywhere in
-    * `t`'s cause chain or the suppressed lists hanging off it. Bounded walk
-    * (same take(20) discipline as [[isTransientRace]]): a cause cycle must
-    * not spin this forever.
-    */
   /** Report each staging table leaked aboard `t` exactly once per retry
     * loop: names already in `reported` are skipped, new ones are recorded
     * then handed to `onLeak` (VERDICT r17 #6 — double-reporting the same
@@ -434,108 +436,16 @@ object JdbcUpsert {
       onLeak(tbl)
     }
 
+  /** Every staging table named by a [[StagingCleanupException]] anywhere in
+    * `t`'s cause chain or the suppressed lists hanging off it. Bounded walk
+    * (same take(20) discipline as [[isTransientRace]]): a cause cycle must
+    * not spin this forever.
+    */
   private[graft] def leakedStagingTables(t: Throwable): Seq[String] = {
     val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(20).toSeq
     chain.flatMap(x => x +: x.getSuppressed.toSeq).collect {
       case s: StagingCleanupException => s.stagingTable
     }.distinct
-  }
-
-  /** Fallback path: batched per-partition UPDATE-then-INSERT — one
-    * `executeBatch` round trip per `batchSize` rows, not one per row
-    * (VERDICT r09 #2; the old loop really was row-at-a-time). Each chunk
-    * batches the UPDATEs, reads the per-statement update-count array to
-    * find the keys that matched nothing, then batches the INSERTs for
-    * exactly those misses. A driver that returns `SUCCESS_NO_INFO`
-    * instead of real counts (JDBC allows it; Derby and most mainstream
-    * drivers return real counts for UPDATE batches) degrades to a per-row
-    * re-execute of just that statement — re-applying an UPDATE with the
-    * same values is idempotent, so correctness is unaffected, only that
-    * row pays the extra round trip. The whole partition commits as one
-    * transaction, as before. Key-uniqueness of the delta stays the
-    * caller's contract (same as the staging path): two rows sharing a
-    * new key inside one chunk both miss their UPDATE and the second
-    * INSERT fails loudly on the key constraint, rather than silently
-    * last-writer-winning the way the old row-at-a-time loop did.
-    */
-  def upsertPerPartition(df: DataFrame, url: String, table: String, keys: Seq[String],
-      batchSize: Int = 500): Unit = {
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    val cols = df.columns.toSeq
-    val nonKeys = cols.filterNot(keys.contains)
-    val updateSql =
-      s"UPDATE $table SET ${nonKeys.map(c => s"$c = ?").mkString(", ")} " +
-        s"WHERE ${keys.map(k => s"$k = ?").mkString(" AND ")}"
-    val insertSql =
-      s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val schema = df.schema
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val c = DriverManager.getConnection(url)
-        // Error-path discipline (round 11, found by the off-spec shim
-        // test): closing a connection with an open transaction THROWS on
-        // Derby, and an exception from `finally c.close()` would REPLACE
-        // the real failure — the loud duplicate-key/off-spec-driver
-        // contract surfaced as a baffling "cannot close a connection"
-        // instead. Roll back on failure first, and suppress (not
-        // propagate) any close-time error onto the original.
-        var failure: Throwable = null
-        try {
-          c.setAutoCommit(false)
-          val upd = c.prepareStatement(updateSql)
-          val ins = c.prepareStatement(insertSql)
-          def bindUpdate(r: org.apache.spark.sql.Row): Unit = {
-            nonKeys.zipWithIndex.foreach { case (col, i) =>
-              upd.setObject(i + 1, r.get(schema.fieldIndex(col)))
-            }
-            keys.zipWithIndex.foreach { case (k, i) =>
-              upd.setObject(nonKeys.size + i + 1, r.get(schema.fieldIndex(k)))
-            }
-          }
-          rows.grouped(batchSize).foreach { chunk =>
-            chunk.foreach { r => bindUpdate(r); upd.addBatch() }
-            val counts = upd.executeBatch()
-            val misses = chunk.zip(counts).flatMap {
-              case (r, 0) => Some(r)
-              // count unknown: re-execute singly to learn matched-or-not
-              case (r, java.sql.Statement.SUCCESS_NO_INFO) =>
-                bindUpdate(r)
-                if (upd.executeUpdate() == 0) Some(r) else None
-              // Any OTHER negative count (EXECUTE_FAILED from an off-spec
-              // driver that returns instead of throwing
-              // BatchUpdateException) must fail loudly — treating it as a
-              // matched UPDATE would leave the row silently neither
-              // updated nor inserted (ADVICE r10).
-              case (_, n) if n < 0 =>
-                throw new IllegalStateException(
-                  s"JDBC driver returned update count $n for a batched " +
-                    s"UPDATE on $table — off-spec failure signal; aborting " +
-                    "the partition transaction")
-              case _ => None
-            }
-            if (misses.nonEmpty) {
-              misses.foreach { r =>
-                cols.zipWithIndex.foreach { case (col, i) =>
-                  ins.setObject(i + 1, r.get(schema.fieldIndex(col)))
-                }
-                ins.addBatch()
-              }
-              ins.executeBatch()
-            }
-          }
-          c.commit()
-        } catch { case t: Throwable =>
-          failure = t
-          try c.rollback() catch { case s: Throwable => t.addSuppressed(s) }
-          throw t
-        } finally {
-          try c.close()
-          catch { case s: Throwable =>
-            if (failure != null) failure.addSuppressed(s) else throw s
-          }
-        }
-      }
-    }
   }
 
   /** Incremental watermark (`SELECT MAX(col)`) — the reference's "fetch only

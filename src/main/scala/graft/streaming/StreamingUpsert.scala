@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 import graft.sources.JdbcUpsert
@@ -22,17 +22,10 @@ object StreamingUpsert {
 
   /** Attach an idempotent JDBC upsert sink to a streaming DataFrame. */
   def upsertSink(stream: DataFrame, url: String, table: String, keys: Seq[String],
-      stagingColumnTypes: Option[String] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          JdbcUpsert.upsertViaStaging(batch, url, table, keys, stagingColumnTypes)
-        }
-      }
-
-  /** Convenience: start the sink. */
-  def start(stream: DataFrame, url: String, table: String, keys: Seq[String],
-      stagingColumnTypes: Option[String] = None): StreamingQuery =
-    upsertSink(stream, url, table, keys, stagingColumnTypes).start()
+      stagingColumnTypes: Option[String] = None): DataStreamWriter[Row] = {
+    val upsertBatch: (DataFrame, Long) => Unit = (batch, _) =>
+      if (!batch.isEmpty)
+        JdbcUpsert.upsertViaStagingRetry(batch, url, table, keys, stagingColumnTypes)
+    stream.writeStream.outputMode("update").foreachBatch(upsertBatch)
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 /** AQE-FINAL exchange ratchet for the shuffle-heavy top 10 (VERDICT r12
   * #1). ExchangeBudgetSpec pins every query's INITIAL physical plan —
@@ -43,13 +42,10 @@ import scala.jdk.CollectionConverters._
   * assertion. Documented-legitimate diffs BETWEEN columns are expected;
   * drift WITHIN a column follows the regenerate-and-justify protocol.
   *
-  * Update workflow (same as every golden-file ratchet here): when a plan
-  * change is INTENTIONAL, re-run with `SPARK_GRAFT_UPDATE_AQE_BUDGET=1`
-  * to regenerate src/test/resources/aqe-budget.tsv, then justify the
-  * diff in the commit message. The git diff of the golden file IS the
-  * review surface.
+  * Golden file: src/test/resources/aqe-budget.tsv, updated through
+  * [[BudgetRatchet]]'s workflow.
   */
-class AqeBudgetSpec extends SparkSpec {
+class AqeBudgetSpec extends SparkSpec with BudgetRatchet {
 
   private val budgetPath = Paths.get("src/test/resources/aqe-budget.tsv")
 
@@ -131,11 +127,9 @@ class AqeBudgetSpec extends SparkSpec {
     // sf0.001 AQE legitimately coalesces differently per partition
     // count; the static shape is the partition-independent observable.)
     val s64 = spark64
-    def counts(s: org.apache.spark.sql.SparkSession, name: String): (Int, Int) = {
-      val p = Registry.queries(name)(s, sf0001).queryExecution.executedPlan.toString
-      ("(?<![A-Za-z])Exchange ".r.findAllIn(p).size,
-        "(?<![A-Za-z])BroadcastExchange".r.findAllIn(p).size)
-    }
+    def counts(s: org.apache.spark.sql.SparkSession, name: String): (Int, Int) =
+      BudgetRatchet.exchangeCounts(
+        Registry.queries(name)(s, sf0001).queryExecution.executedPlan.toString)
     val drifted = Registry.all.map(_.name).sorted.flatMap { n =>
       val at4 = counts(spark, n)
       val at64 = counts(s64, n)
@@ -146,44 +140,15 @@ class AqeBudgetSpec extends SparkSpec {
   }
 
   test("audited queries' AQE-final stage counts match the committed budget at partitions=4 AND 64") {
-    val actual: Seq[(String, ((Int, Int, Int), (Int, Int, Int)))] =
-      audited.sorted.map(n => n -> ((measure(spark, n), measure(spark64, n))))
-    if (sys.env.contains("SPARK_GRAFT_UPDATE_AQE_BUDGET")) {
-      val lines = ("# query\tshuffle4\tbroadcast4\treuse4\tshuffle64\tbroadcast64\treuse64 — " +
+    val actual = audited.sorted.map { n =>
+      val ((s4, b4, r4), (s64, b64, r64)) = (measure(spark, n), measure(spark64, n))
+      n -> s"$s4\t$b4\t$r4\t$s64\t$b64\t$r64"
+    }
+    assertMatchesBudget(budgetPath, "AQE-final budget",
+      "shuffle4\tbroadcast4\treuse4\tshuffle64\tbroadcast64\treuse64 — " +
         "AQE-final distinct materialized stages at shuffle.partitions=4 and 64; " +
         "columns may legitimately differ from EACH OTHER (AQE coalescing sees " +
-        "different maps per setting); drift WITHIN a column needs a justified " +
-        "regenerate: SPARK_GRAFT_UPDATE_AQE_BUDGET=1 sbt 'testOnly graft.AqeBudgetSpec'") +:
-        actual.map { case (n, ((s4, b4, r4), (s64, b64, r64))) =>
-          s"$n\t$s4\t$b4\t$r4\t$s64\t$b64\t$r64" }
-      Files.createDirectories(budgetPath.getParent)
-      Files.write(budgetPath, lines.asJava)
-      info(s"rewrote $budgetPath with ${actual.size} entries")
-    }
-    assert(Files.exists(budgetPath),
-      s"$budgetPath missing — run once with SPARK_GRAFT_UPDATE_AQE_BUDGET=1 to seed it")
-    val expected: Map[String, ((Int, Int, Int), (Int, Int, Int))] =
-      Files.readAllLines(budgetPath).asScala
-        .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-        .map { l =>
-          val f = l.split("\t")
-          f(0) -> (((f(1).toInt, f(2).toInt, f(3).toInt),
-            (f(4).toInt, f(5).toInt, f(6).toInt)))
-        }.toMap
-
-    val missing = actual.map(_._1).filterNot(expected.contains)
-    val stale = expected.keys.toSeq.filterNot(actual.map(_._1).contains)
-    val drifted = actual.flatMap { case (n, (got4, got64)) =>
-      expected.get(n).toSeq.flatMap { case (want4, want64) =>
-        (if (want4 != got4) Seq(s"$n @4: (shuffle, broadcast, reuse) $want4 -> $got4") else Nil) ++
-          (if (want64 != got64) Seq(s"$n @64: (shuffle, broadcast, reuse) $want64 -> $got64") else Nil)
-      }
-    }
-    assert(missing.isEmpty && stale.isEmpty && drifted.isEmpty,
-      s"""AQE-final budget drift (intentional? regenerate the golden file and justify in the commit):
-         |  unbudgeted queries: ${missing.mkString(", ")}
-         |  stale budget rows:  ${stale.mkString(", ")}
-         |  drifted counts:
-         |    ${drifted.mkString("\n    ")}""".stripMargin)
+        "different maps per setting); drift WITHIN a column must be justified",
+      actual)
   }
 }

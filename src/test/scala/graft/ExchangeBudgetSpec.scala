@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 /** Registry-wide shuffle-budget ratchet (VERDICT r09 item 4).
   *
@@ -34,26 +33,12 @@ import scala.jdk.CollectionConverters._
   * so the expensive scan+explode+aggregate base runs once. Drift in the
   * static count still means a real plan change, which is what's pinned.
   *
-  * Update workflow (same as the teeth checks): when a plan change is
-  * INTENTIONAL, re-run with `SPARK_GRAFT_UPDATE_EXCHANGE_BUDGET=1` to
-  * regenerate src/test/resources/exchange-budget.tsv, then justify the
-  * diff in the commit message. The git diff of the golden file IS the
-  * review surface.
+  * Golden file: src/test/resources/exchange-budget.tsv, updated through
+  * [[BudgetRatchet]]'s workflow.
   */
-class ExchangeBudgetSpec extends SparkSpec {
+class ExchangeBudgetSpec extends SparkSpec with BudgetRatchet {
 
   private val budgetPath = Paths.get("src/test/resources/exchange-budget.tsv")
-
-  /** (shuffle, broadcast) exchange counts in the query's initial physical
-    * plan. The negative lookbehind keeps `BroadcastExchange` and
-    * `ReusedExchange` out of the shuffle count.
-    */
-  private def exchangeCounts(name: String): (Int, Int) = {
-    val p = Registry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
-    val shuffles = "(?<![A-Za-z])Exchange ".r.findAllIn(p).size
-    val broadcasts = "(?<![A-Za-z])BroadcastExchange".r.findAllIn(p).size
-    (shuffles, broadcasts)
-  }
 
   test("the exchange counter has teeth: added shuffles are visible") {
     // Teeth convention: before trusting the ratchet, prove the counter
@@ -65,8 +50,7 @@ class ExchangeBudgetSpec extends SparkSpec {
     // neutral fixture isolates the counter itself.
     import org.apache.spark.sql.functions._
     def shuffles(df: org.apache.spark.sql.DataFrame) =
-      "(?<![A-Za-z])Exchange ".r
-        .findAllIn(df.queryExecution.executedPlan.toString).size
+      BudgetRatchet.exchangeCounts(df.queryExecution.executedPlan.toString)._1
     val base = spark.range(100).toDF("id")
     assert(shuffles(base) === 0)
     assert(shuffles(base.repartition(8, col("id"))) === 1,
@@ -76,36 +60,12 @@ class ExchangeBudgetSpec extends SparkSpec {
   }
 
   test("every registered query's Exchange counts match the committed budget") {
-    val actual: Seq[(String, Int, Int)] = Registry.all.map(_.name).sorted.map { n =>
-      val (s, b) = exchangeCounts(n)
-      (n, s, b)
+    val actual = Registry.all.map(_.name).sorted.map { n =>
+      val (shuffles, broadcasts) = BudgetRatchet.exchangeCounts(
+        Registry.queries(n)(spark, sf0001).queryExecution.executedPlan.toString)
+      n -> s"$shuffles\t$broadcasts"
     }
-    if (sys.env.contains("SPARK_GRAFT_UPDATE_EXCHANGE_BUDGET")) {
-      val lines = ("# query\tshuffle_exchanges\tbroadcast_exchanges — regenerate with" +
-        " SPARK_GRAFT_UPDATE_EXCHANGE_BUDGET=1 sbt 'testOnly graft.ExchangeBudgetSpec'") +:
-        actual.map { case (n, s, b) => s"$n\t$s\t$b" }
-      Files.createDirectories(budgetPath.getParent)
-      Files.write(budgetPath, lines.asJava)
-      info(s"rewrote $budgetPath with ${actual.size} entries")
-    }
-    assert(Files.exists(budgetPath),
-      s"$budgetPath missing — run once with SPARK_GRAFT_UPDATE_EXCHANGE_BUDGET=1 to seed it")
-    val expected: Map[String, (Int, Int)] = Files.readAllLines(budgetPath).asScala
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l => val f = l.split("\t"); f(0) -> (f(1).toInt, f(2).toInt) }.toMap
-
-    val missing = actual.map(_._1).filterNot(expected.contains)
-    val stale = expected.keys.toSeq.filterNot(actual.map(_._1).contains)
-    val drifted = actual.flatMap { case (n, s, b) =>
-      expected.get(n).collect { case (es, eb) if (es, eb) != (s, b) =>
-        s"$n: shuffle $es->$s, broadcast $eb->$b"
-      }
-    }
-    assert(missing.isEmpty && stale.isEmpty && drifted.isEmpty,
-      s"""Exchange budget drift (intentional? regenerate the golden file and justify in the commit):
-         |  unbudgeted queries: ${missing.mkString(", ")}
-         |  stale budget rows:  ${stale.mkString(", ")}
-         |  drifted counts:
-         |    ${drifted.mkString("\n    ")}""".stripMargin)
+    assertMatchesBudget(budgetPath, "Exchange budget",
+      "shuffle_exchanges\tbroadcast_exchanges", actual)
   }
 }

@@ -118,4 +118,45 @@ class IncrementalPipelineSpec extends SparkSpec {
       ("AAA", -731L, 10.0), ("AAA", -730L, 11.0), ("AAA", 5L, 12.0),
       ("BBB", -731L, 20.0), ("BBB", -1L, 21.0)))
   }
+
+  test("a merge race during the daily load is retried, not fatal") {
+    // The shim fails the load's first MERGE with the concurrent-writer
+    // insert race (SQLState 23505); run() must re-run the upsert and land
+    // the delta once, with no staging table left behind.
+    import spark.implicits._
+    ShimJdbc.ensureRegistered()
+    val raceUrl = "jdbc:graftshim:mergerace:memory:graftpiperace;create=true"
+    val plainUrl = "jdbc:derby:memory:graftpiperace;create=true"
+    val src = Files.createTempDirectory("graft_incr_race").toString
+    graft.sources.JdbcUpsert.ensureTable(plainUrl,
+      """CREATE TABLE bars (
+        |  code VARCHAR(16) NOT NULL,
+        |  trade_date BIGINT NOT NULL,
+        |  close_px DOUBLE,
+        |  PRIMARY KEY (code, trade_date))""".stripMargin)
+    Seq(("AAA", 20240101L, 10.0), ("BBB", 20240101L, 20.0))
+      .toDF("code", "trade_date", "close_px")
+      .write.mode("overwrite").parquet(src)
+
+    ShimJdbc.armStatementFault("mergerace")
+    val (stats, fired) =
+      try {
+        val stats = IncrementalPipeline.run(spark, src, raceUrl, "bars",
+          keys = Seq("code", "trade_date"), watermarkCol = "trade_date",
+          stagingColumnTypes = Some("code VARCHAR(16)"))
+        (stats, !ShimJdbc.isArmed("mergerace"))
+      } finally ShimJdbc.disarmAll()
+    assert(fired, "the armed merge race never fired")
+    assert(stats.watermark === None && stats.deltaRows === 2)
+    val rows = spark.read.format("jdbc").option("url", plainUrl)
+      .option("dbtable", "bars").load().collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    assert(rows === Seq(("AAA", 20240101L, 10.0), ("BBB", 20240101L, 20.0)))
+    val c = java.sql.DriverManager.getConnection(plainUrl)
+    try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME LIKE 'BARS_STG%'")
+      assert(!rs.next(), "the failed attempt left a staging table")
+    } finally c.close()
+  }
 }

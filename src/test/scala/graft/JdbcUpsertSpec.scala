@@ -32,14 +32,14 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
 
     val day1 = Seq(("AAA", 20240101L, 10.0), ("BBB", 20240101L, 20.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(day1, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(day1, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     assert(readBars().count() === 2)
 
     // delta: one overlapping key with a corrected price + one new day
     val delta = Seq(("AAA", 20240101L, 11.5), ("AAA", 20240102L, 12.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(delta, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
-    JdbcUpsert.upsertViaStaging(delta, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)")) // idempotent
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)")) // idempotent
 
     val rows = readBars().orderBy("code", "trade_date")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -54,7 +54,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // Clean run first — the expected end state.
     val delta = Seq(("AAA", 20240101L, 10.0), ("BBB", 20240101L, 20.0), ("CCC", 20240102L, 30.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(delta, url, "bars_retry", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "bars_retry", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     val clean = readTable("bars_retry")
 
     // A retried/speculated task re-appends its partition to staging: the
@@ -64,12 +64,12 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // duplicate rows into the frame the writer stages.
     val corrected = Seq(("AAA", 20240101L, 11.0), ("BBB", 20240101L, 22.0), ("CCC", 20240102L, 33.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(corrected.union(corrected), url, "bars_retry",
+    JdbcUpsert.upsertViaStagingRetry(corrected.union(corrected), url, "bars_retry",
       Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     assert(readTable("bars_retry") ===
       Seq(("AAA", 20240101L, 11.0), ("BBB", 20240101L, 22.0), ("CCC", 20240102L, 33.0)))
 
-    JdbcUpsert.upsertViaStaging(delta.union(delta.limit(1)), url, "bars_retry",
+    JdbcUpsert.upsertViaStagingRetry(delta.union(delta.limit(1)), url, "bars_retry",
       Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     assert(readTable("bars_retry") === clean,
       "a partially-duplicated staging write must merge to the clean-run state")
@@ -80,45 +80,22 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       .orderBy("code", "trade_date")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
 
-  test("per-partition upsert matches and stays idempotent") {
+  test("staging upsert of a multi-partition delta updates and inserts") {
     import spark.implicits._
-    val delta = Seq(("BBB", 20240101L, 21.0), ("CCC", 20240103L, 30.0))
-      .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertPerPartition(delta, url, "bars", Seq("code", "trade_date"))
-    JdbcUpsert.upsertPerPartition(delta, url, "bars", Seq("code", "trade_date"))
-    val rows = readBars().orderBy("code", "trade_date")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    assert(rows.toSeq === Seq(
-      ("AAA", 20240101L, 11.5), ("AAA", 20240102L, 12.0),
-      ("BBB", 20240101L, 21.0), ("CCC", 20240103L, 30.0)))
-  }
-
-  test("batched per-partition upsert equals the staging path on a multi-partition delta") {
-    import spark.implicits._
-    // VERDICT r09 #2: the fallback now chunks addBatch/executeBatch and
-    // routes update-count-0 rows to a batched INSERT. Drive it across
-    // several partitions with a batchSize smaller than the per-partition
-    // row count (3 partitions × ~13 rows, batchSize 7 ⇒ every partition
-    // runs ≥2 chunks, every chunk mixes hits and misses), then pin
-    // result-equality with the staging MERGE path and idempotence.
-    JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_pp"))
+    // A 3-partition delta: Spark's JDBC writer stages it from three tasks
+    // into one staging table, and one MERGE applies it.
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_mg"))
     val keys = Seq("code", "trade_date")
     val seed = (0 until 25).map(i => (f"C$i%02d", 20240101L, i.toDouble))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_pp", keys, Some("code VARCHAR(16)"))
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_mg", keys, Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_mg", keys, Some("code VARCHAR(16)"))
 
     // rows 10-24 update seeded keys, 25-39 are fresh inserts
     val delta = (10 until 40).map(i => (f"C$i%02d", 20240101L, i + 0.5))
       .toDF("code", "trade_date", "close_px").repartition(3)
-    JdbcUpsert.upsertPerPartition(delta, url, "bars_pp", keys, batchSize = 7)
-    JdbcUpsert.upsertPerPartition(delta, url, "bars_pp", keys, batchSize = 7) // idempotent
-    JdbcUpsert.upsertViaStaging(delta, url, "bars_mg", keys, Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "bars_mg", keys, Some("code VARCHAR(16)"))
 
-    val got = readTable("bars_pp")
-    assert(got === readTable("bars_mg"),
-      "batched fallback and staging MERGE must produce identical end states")
+    val got = readTable("bars_mg")
     assert(got.size === 40)
     assert(got.filter(_._1 < "C10").forall { case (c, _, px) => px === c.drop(1).toInt.toDouble },
       "non-delta seed rows must be untouched")
@@ -134,60 +111,34 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
         |  trade_date BIGINT NOT NULL,
         |  PRIMARY KEY (code, trade_date))""".stripMargin)
     val keys = Seq(("AAA", 20240101L), ("BBB", 20240102L)).toDF("code", "trade_date")
-    JdbcUpsert.upsertViaStaging(keys, url, "seen_keys", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(keys, url, "seen_keys", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     // re-applying the same all-key delta must neither fail (empty UPDATE
     // SET would be malformed SQL) nor duplicate
-    JdbcUpsert.upsertViaStaging(keys, url, "seen_keys", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(keys, url, "seen_keys", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     val n = spark.read.format("jdbc").option("url", url)
       .option("dbtable", "seen_keys").load().count()
     assert(n === 2)
   }
 
   test("incremental watermark load fetches only newer rows") {
+    import spark.implicits._
+    // a later day lands in bars: its watermark moves to 20240103
+    JdbcUpsert.upsertViaStagingRetry(
+      Seq(("BBB", 20240101L, 21.0), ("CCC", 20240103L, 30.0)).toDF("code", "trade_date", "close_px"),
+      url, "bars", Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     val w = JdbcUpsert.maxWatermark(spark, url, "bars", "trade_date")
     assert(w === Some(20240103L))
     // a source with one old (already-loaded) and one new row
-    import spark.implicits._
     val source = "bars_src"
     JdbcUpsert.ensureTable(url,
       ddl.replace("CREATE TABLE bars", s"CREATE TABLE $source"))
     val src = Seq(("AAA", 20240101L, 11.5), ("DDD", 20240104L, 40.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(src, url, source, Seq("code", "trade_date"), Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(src, url, source, Seq("code", "trade_date"), Some("code VARCHAR(16)"))
 
     val delta = JdbcUpsert.readNewerThan(spark, url, source, "trade_date", w)
     assert(delta.count() === 1)
     assert(delta.head().getString(0) === "DDD")
-  }
-
-  test("SUCCESS_NO_INFO batch counts degrade to per-row probe, same result") {
-    // VERDICT r10 #4: Derby returns real counts, so the SUCCESS_NO_INFO
-    // branch had never executed. ShimJdbc registers a wrapper driver that
-    // rewrites every batch count to SUCCESS_NO_INFO — the fallback must
-    // then produce the exact staging-path end state and stay idempotent.
-    import spark.implicits._
-    ShimJdbc.ensureRegistered()
-    JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_ni"))
-    JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_ni_mg"))
-    val keys = Seq("code", "trade_date")
-    val seed = (0 until 10).map(i => (f"N$i%02d", 20240101L, i.toDouble))
-      .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_ni", keys, Some("code VARCHAR(16)"))
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_ni_mg", keys, Some("code VARCHAR(16)"))
-
-    // rows 5-9 update seeded keys, 10-14 are fresh inserts; batchSize 4
-    // so chunks mix hits and misses
-    val delta = (5 until 15).map(i => (f"N$i%02d", 20240101L, i + 0.5))
-      .toDF("code", "trade_date", "close_px").repartition(2)
-    val before = ShimJdbc.batchRewrites.get()
-    val shimUrl = "jdbc:graftshim:noinfo:memory:graftdb;create=true"
-    JdbcUpsert.upsertPerPartition(delta, shimUrl, "bars_ni", keys, batchSize = 4)
-    JdbcUpsert.upsertPerPartition(delta, shimUrl, "bars_ni", keys, batchSize = 4) // idempotent
-    assert(ShimJdbc.batchRewrites.get() > before,
-      "the shim never rewrote a batch — the forced path did not run")
-    JdbcUpsert.upsertViaStaging(delta, url, "bars_ni_mg", keys, Some("code VARCHAR(16)"))
-    assert(readTable("bars_ni") === readTable("bars_ni_mg"),
-      "the SUCCESS_NO_INFO degraded path must equal the staging MERGE end state")
   }
 
   test("degenerate deltas: NULL key fails loudly, conflicting keys fail loudly, empty delta is a no-op") {
@@ -203,7 +154,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_degen"))
     val keys = Seq("code", "trade_date")
     val seed = Seq(("AAA", 20240101L, 1.0)).toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_degen", keys, Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_degen", keys, Some("code VARCHAR(16)"))
 
     // NULL in a key column: loud constraint violation, target unchanged.
     // The NULL rides the BIGINT key: a NULL in the VARCHAR key dies even
@@ -213,7 +164,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val nullKey = Seq((Some("EEE"), Option.empty[Long], Some(9.0)))
       .toDF("code", "trade_date", "close_px")
     val e1 = intercept[java.sql.SQLException] {
-      JdbcUpsert.upsertViaStaging(nullKey, url, "bars_degen", keys, Some("code VARCHAR(16)"))
+      JdbcUpsert.upsertViaStagingRetry(nullKey, url, "bars_degen", keys, Some("code VARCHAR(16)"))
     }
     assert(e1.getSQLState.startsWith("23"), // integrity-constraint class
       s"expected a NOT NULL violation, got ${e1.getSQLState}: ${e1.getMessage}")
@@ -228,14 +179,14 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val conflict = Seq(("AAA", 20240101L, 2.0), ("AAA", 20240101L, 3.0))
       .toDF("code", "trade_date", "close_px")
     intercept[java.sql.SQLException] {
-      JdbcUpsert.upsertViaStaging(conflict, url, "bars_degen", keys, Some("code VARCHAR(16)"))
+      JdbcUpsert.upsertViaStagingRetry(conflict, url, "bars_degen", keys, Some("code VARCHAR(16)"))
     }
     assert(readTable("bars_degen") === Seq(("AAA", 20240101L, 1.0)),
       "a conflicting-key delta must not pick a winner")
 
     // Empty delta (the `empty` fixture-set shape): staging write of zero
     // rows, MERGE matches nothing, target unchanged, no crash.
-    JdbcUpsert.upsertViaStaging(seed.filter(col("close_px") < 0), url,
+    JdbcUpsert.upsertViaStagingRetry(seed.filter(col("close_px") < 0), url,
       "bars_degen", keys, Some("code VARCHAR(16)"))
     assert(readTable("bars_degen") === Seq(("AAA", 20240101L, 1.0)))
   }
@@ -262,7 +213,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_conc"))
     val keys = Seq("code", "trade_date")
     val seed = (0 until 6).map(i => (f"K$i%02d", 20240101L, i.toDouble))
-    JdbcUpsert.upsertViaStaging(seed.toDF("code", "trade_date", "close_px"),
+    JdbcUpsert.upsertViaStagingRetry(seed.toDF("code", "trade_date", "close_px"),
       url, "bars_conc", keys, Some("code VARCHAR(16)"))
 
     // K02..K05 overlap with different values (UPDATE-vs-UPDATE race),
@@ -289,7 +240,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
             def call(): Int = {
               barrier.await(60, TimeUnit.SECONDS)
               JdbcUpsert.upsertViaStagingRetry(df, url, "bars_conc", keys,
-                Some("code VARCHAR(16)"), maxRetries = 5)
+                Some("code VARCHAR(16)"))
             }
           })
         }
@@ -490,29 +441,13 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     }
   }
 
-  test("off-spec negative batch counts abort the partition loudly") {
-    // ADVICE r10: a driver returning EXECUTE_FAILED instead of throwing
-    // BatchUpdateException must not be treated as a successful UPDATE.
-    import spark.implicits._
-    ShimJdbc.ensureRegistered()
-    JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_offspec"))
-    val seed = Seq(("AAA", 20240101L, 1.0)).toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_offspec", Seq("code", "trade_date"),
-      Some("code VARCHAR(16)"))
-    val delta = Seq(("AAA", 20240101L, 2.0), ("BBB", 20240102L, 3.0))
-      .toDF("code", "trade_date", "close_px")
-    val e = intercept[Exception] {
-      JdbcUpsert.upsertPerPartition(delta,
-        "jdbc:graftshim:fail:memory:graftdb;create=true", "bars_offspec",
-        Seq("code", "trade_date"))
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
-    assert(chain(e).exists(c => c.isInstanceOf[IllegalStateException] &&
-      c.getMessage.contains("off-spec")),
-      s"expected the IllegalStateException guard in the cause chain, got $e")
-    // The partition transaction never committed: target unchanged.
-    assert(readTable("bars_offspec") === Seq(("AAA", 20240101L, 1.0)))
+  test("the upsert dialect is derived from the JDBC URL") {
+    import graft.sources.{AnsiMergeDialect, MySqlUpsertDialect}
+    for (u <- Seq("jdbc:mysql://db:3306/wind", "jdbc:mariadb://db/wind", "JDBC:MySQL://db/wind"))
+      assert(JdbcUpsert.dialectFor(u) === MySqlUpsertDialect, u)
+    for (u <- Seq(url, "jdbc:postgresql://db/wind", "jdbc:sqlserver://db;databaseName=wind",
+        "jdbc:graftshim:mergerace:memory:graftdb"))
+      assert(JdbcUpsert.dialectFor(u) === AnsiMergeDialect, u)
   }
 
   test("deterministic insert race: retry wrapper recovers in exactly one retry") {
@@ -528,14 +463,14 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_race"))
     val keys = Seq("code", "trade_date")
     val seed = Seq(("AAA", 20240101L, 1.0)).toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_race", keys, Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_race", keys, Some("code VARCHAR(16)"))
 
     val delta = Seq(("AAA", 20240101L, 2.0), ("BBB", 20240102L, 3.0))
       .toDF("code", "trade_date", "close_px")
     ShimJdbc.armStatementFault("mergerace")
     val retries = JdbcUpsert.upsertViaStagingRetry(delta,
       "jdbc:graftshim:mergerace:memory:graftdb;create=true", "bars_race", keys,
-      Some("code VARCHAR(16)"), maxRetries = 3)
+      Some("code VARCHAR(16)"))
     assert(retries === 1, s"expected exactly one retry, got $retries")
     assert(readTable("bars_race") ===
       Seq(("AAA", 20240101L, 2.0), ("BBB", 20240102L, 3.0)))
@@ -565,7 +500,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val e = intercept[graft.sources.StagingCleanupException] {
       JdbcUpsert.upsertViaStagingRetry(delta,
         "jdbc:graftshim:dropfail:memory:graftdb;create=true", "bars_drop", keys,
-        Some("code VARCHAR(16)"), maxRetries = 3)
+        Some("code VARCHAR(16)"))
     }
     assert(e.stagingTable.startsWith("bars_drop_stg_"),
       s"exception must name the leaked staging table, got ${e.stagingTable}")
@@ -599,7 +534,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val e = intercept[graft.sources.StagingCleanupException] {
       JdbcUpsert.upsertViaStagingRetry(delta,
         "jdbc:graftshim:dropdedupfail:memory:graftdb;create=true", "bars_ddrop", keys,
-        Some("code VARCHAR(16)"), maxRetries = 3)
+        Some("code VARCHAR(16)"))
     }
     assert(e.stagingTable.startsWith("bars_ddrop_stg_") && e.stagingTable.endsWith("_d"),
       s"exception must name the leaked deduped table, got ${e.stagingTable}")
@@ -628,7 +563,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
   test("adversarial rows round-trip the staging upsert byte-exact (unicode/control/extremes)") {
     // VERDICT r15 #4: the DB-update path had only ever carried clean
     // synthetic bars. Replay the degenerate-set genre through
-    // ensureTable → upsertViaStaging → upsertViaStagingRetry → read-back:
+    // ensureTable → seed upsert → delta upsert → read-back:
     // multibyte text (CJK + a surrogate-pair emoji + cyrillic), NBSP and
     // ZWSP inside key VARCHARs, C0 control characters, tab/newline, and
     // ±extreme doubles. Parity is asserted BYTE-exact on the UTF-8
@@ -648,9 +583,9 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       ("ctl\u0001\u001F", java.lang.Double.MAX_VALUE, "c\u0001d\u001Fe"),
       ("tab\tnl", -java.lang.Double.MAX_VALUE, "x\ty\nz"))
       .toDF("k", "px", "txt")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_adv", Seq("k"),
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_adv", Seq("k"),
       Some("k VARCHAR(64), txt VARCHAR(256)"))
-    // Delta through the retry wrapper: the emoji key must MATCH its seed
+    // The delta: the emoji key must MATCH its seed
     // row (update in place — multibyte keys survive the MERGE ON
     // comparison), and bare "ab" must NOT match "a<ZWSP>b" (insert —
     // zero-width characters are significant in Derby VARCHAR equality).
@@ -697,9 +632,9 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
         |  k VARCHAR(16) NOT NULL PRIMARY KEY,
         |  px DOUBLE)""".stripMargin)
     val seed = Seq(("ts", 1.0)).toDF("k", "px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_pad", Seq("k"), Some("k VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_pad", Seq("k"), Some("k VARCHAR(16)"))
     val delta = Seq(("ts ", 2.0)).toDF("k", "px")
-    JdbcUpsert.upsertViaStaging(delta, url, "bars_pad", Seq("k"), Some("k VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "bars_pad", Seq("k"), Some("k VARCHAR(16)"))
     val rows = spark.read.format("jdbc").option("url", url).option("dbtable", "bars_pad").load()
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(rows.length === 1, s"expected PAD SPACE coalescing to one row, got $rows")
@@ -722,7 +657,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
         |  px DOUBLE)""".stripMargin)
     val delta = Seq(("n", Double.NaN)).toDF("k", "px")
     val e = intercept[Exception] {
-      JdbcUpsert.upsertViaStaging(delta, url, "bars_nan", Seq("k"), Some("k VARCHAR(16)"))
+      JdbcUpsert.upsertViaStagingRetry(delta, url, "bars_nan", Seq("k"), Some("k VARCHAR(16)"))
     }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
@@ -749,7 +684,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE bars_leak"))
     val keys = Seq("code", "trade_date")
     val seed = Seq(("AAA", 20240101L, 1.0)).toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(seed, url, "bars_leak", keys, Some("code VARCHAR(16)"))
+    JdbcUpsert.upsertViaStagingRetry(seed, url, "bars_leak", keys, Some("code VARCHAR(16)"))
 
     val delta = Seq(("AAA", 20240101L, 2.0), ("BBB", 20240102L, 3.0))
       .toDF("code", "trade_date", "close_px")
@@ -761,7 +696,7 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val leaked = scala.collection.mutable.ArrayBuffer.empty[String]
     val retries = JdbcUpsert.upsertViaStagingRetry(delta,
       "jdbc:graftshim:racedropfail:memory:graftdb;create=true", "bars_leak", keys,
-      Some("code VARCHAR(16)"), maxRetries = 3, onLeak = leaked += _)
+      Some("code VARCHAR(16)"), onLeak = leaked += _)
     assert(retries === 1, s"expected exactly one retry, got $retries")
     assert(readTable("bars_leak") ===
       Seq(("AAA", 20240101L, 2.0), ("BBB", 20240102L, 3.0)))
@@ -864,26 +799,21 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     JdbcUpsert.ensureTable(url, ddl.replace("CREATE TABLE bars", "CREATE TABLE APPX.bars"))
     val day1 = Seq(("AAA", 20240101L, 10.0), ("BBB", 20240101L, 20.0))
       .toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(day1, url, "APPX.bars",
+    JdbcUpsert.upsertViaStagingRetry(day1, url, "APPX.bars",
       Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     val delta = Seq(("AAA", 20240101L, 11.5)).toDF("code", "trade_date", "close_px")
-    JdbcUpsert.upsertViaStaging(delta, url, "APPX.bars",
+    JdbcUpsert.upsertViaStagingRetry(delta, url, "APPX.bars",
       Seq("code", "trade_date"), Some("code VARCHAR(16)"))
     val rows = readTable("APPX.bars")
     assert(rows === Seq(("AAA", 20240101L, 11.5), ("BBB", 20240101L, 20.0)))
   }
 }
 
-/** Test-only JDBC driver: wraps embedded Derby and injects faults.
-  * Batch modes rewrite every `executeBatch` count array — `noinfo` mode to
-  * `SUCCESS_NO_INFO` (the JDBC-legal "statement succeeded, count unknown"
-  * many drivers emit for large batches), `fail` mode to an off-spec `-3`
-  * (a driver signaling failure through the count array instead of
-  * `BatchUpdateException`). Statement modes (round 15 — deterministic
-  * twins of the nondeterministic concurrent-writer race) arm a ONE-SHOT
-  * fault on plain `executeUpdate`: `mergerace` throws SQLState 23505 on
-  * the first MERGE (the both-NOT-MATCHED insert race, exactly as the
-  * loser sees it), `dropfail` throws 40XL1 on the first staging-table
+/** Test-only JDBC driver: wraps embedded Derby and injects faults. Its
+  * modes (round 15 — deterministic twins of the nondeterministic
+  * concurrent-writer race) arm a ONE-SHOT fault on plain `executeUpdate`:
+  * `mergerace` throws SQLState 23505 on the first MERGE (the
+  * both-NOT-MATCHED insert race, exactly as the loser sees it), `dropfail` throws 40XL1 on the first staging-table
   * DROP (the post-commit cleanup failure). Arm via [[armStatementFault]]
   * before the call under test; everything else passes through, so Spark's
   * distributed staging write works against the shim URL unchanged.
@@ -891,9 +821,8 @@ class JdbcUpsertSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
   */
 object ShimJdbc {
   import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
-  import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Statement}
+  import java.sql.{Connection, DriverManager, SQLException, Statement}
 
-  val batchRewrites = new java.util.concurrent.atomic.AtomicInteger(0)
   private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
   // Armed one-shot faults, KEYED BY FAULT KIND (ADVICE r15): the old
   // single shared AtomicBoolean meant a test that armed but never fired
@@ -920,17 +849,10 @@ object ShimJdbc {
   /** Safety net against stale arms outliving a failed test (ADVICE r15). */
   def disarmAll(): Unit = armed.clear()
 
-  private def consume(kind: String): Boolean = armed.remove(kind)
+  /** Whether an armed fault of `kind` has not fired yet. */
+  def isArmed(kind: String): Boolean = armed.contains(kind)
 
-  private def rewrite(mode: String, counts: Array[Int]): Array[Int] = {
-    batchRewrites.incrementAndGet()
-    mode match {
-      case "noinfo" =>
-        counts.map(c => if (c >= 0) java.sql.Statement.SUCCESS_NO_INFO else c)
-      case "fail" => counts.map(_ => -3)
-      case m => throw new IllegalArgumentException(s"unknown shim mode $m")
-    }
-  }
+  private def consume(kind: String): Boolean = armed.remove(kind)
 
   private def handler(target: AnyRef, wrap: (Method, AnyRef) => AnyRef): InvocationHandler =
     (_, m: Method, args: Array[AnyRef]) =>
@@ -946,12 +868,6 @@ object ShimJdbc {
       try { if (args == null) m.invoke(target) else m.invoke(target, args: _*) }
       catch { case e: InvocationTargetException => throw e.getCause }
     }
-
-  private def proxyStatement(real: PreparedStatement, mode: String): PreparedStatement =
-    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[PreparedStatement]),
-      handler(real, (m, r) =>
-        if (m.getName == "executeBatch") rewrite(mode, r.asInstanceOf[Array[Int]])
-        else r)).asInstanceOf[PreparedStatement]
 
   private def proxyPlainStatement(real: Statement, mode: String): Statement =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Statement]),
@@ -975,14 +891,8 @@ object ShimJdbc {
   private[graft] def proxyConnection(real: Connection, mode: String): Connection =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
       handler(real, (m, r) =>
-        if (m.getName == "prepareStatement" && (mode == "noinfo" || mode == "fail"))
-          proxyStatement(r.asInstanceOf[PreparedStatement], mode)
-        else if (m.getName == "createStatement" &&
-            (mode == "mergerace" || mode == "dropfail" || mode == "racedropfail" ||
-              mode == "dropdedupfail"))
-          proxyPlainStatement(r.asInstanceOf[Statement], mode)
+        if (m.getName == "createStatement") proxyPlainStatement(r.asInstanceOf[Statement], mode)
         else r)).asInstanceOf[Connection]
-
 }
 
 /** TOP-LEVEL (not nested in [[ShimJdbc]]) because Spark's JDBC writer

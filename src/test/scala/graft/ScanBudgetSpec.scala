@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Registry-wide LIVE-SCAN ratchet (round 11, the agg_chi_square lesson
   * generalized).
@@ -30,12 +29,11 @@ import scala.jdk.CollectionConverters._
   * once, and the fourth (win_ntile) is the exception below.
   *
   * Counting and signature extraction live in [[ScanAudit]] (also a
-  * standalone main for ad-hoc audits at other scales). Update workflow:
-  * when a plan change is INTENTIONAL, regenerate with
-  * `SPARK_GRAFT_UPDATE_SCAN_BUDGET=1 sbt 'Test/testOnly graft.ScanBudgetSpec'`
-  * and justify the golden-file diff in the commit message.
+  * standalone main for ad-hoc audits at other scales). Golden files:
+  * src/test/resources/scan-budget.tsv and read-width.tsv, updated through
+  * [[BudgetRatchet]]'s workflow.
   */
-class ScanBudgetSpec extends SparkSpec {
+class ScanBudgetSpec extends SparkSpec with BudgetRatchet {
 
   private val budgetPath = Paths.get("src/test/resources/scan-budget.tsv")
   private val widthPath = Paths.get("src/test/resources/read-width.tsv")
@@ -134,55 +132,23 @@ class ScanBudgetSpec extends SparkSpec {
 
     def fmt(m: Map[String, (Int, Int)]): String =
       m.toSeq.sorted.map { case (t, (n, sigs)) => s"$t:$n:$sigs" }.mkString(",")
-
-    if (sys.env.contains("SPARK_GRAFT_UPDATE_SCAN_BUDGET")) {
-      val lines = ("# query\ttable:live_scans:distinct_signatures,... — final adaptive plan" +
-        " at sf0.001; regenerate with SPARK_GRAFT_UPDATE_SCAN_BUDGET=1" +
-        " sbt 'Test/testOnly graft.ScanBudgetSpec'") +:
-        actual.map { case (n, m) => s"$n\t${fmt(m)}" }
-      Files.createDirectories(budgetPath.getParent)
-      Files.write(budgetPath, lines.asJava)
-      info(s"rewrote $budgetPath with ${actual.size} entries")
-    }
+    assertMatchesBudget(budgetPath, "Scan budget",
+      "table:live_scans:distinct_signatures,... — final adaptive plan at sf0.001",
+      actual.map { case (n, m) => n -> fmt(m) })
 
     // READ-WIDTH ratchet (round 14): pin each live scan's pruned
     // data-column count. The count/signature budget above cannot see a
     // scan silently WIDENING — a projection refactor that reads the full
     // row for a 2-column answer keeps live_scans:distinct_signatures
-    // intact while multiplying bytes read at 100 TB. Width drift fails
-    // here with the same regenerate-and-justify protocol. Same execution
-    // pass as the scan budget — this pins the same final adaptive plans.
-    val widths: Seq[(String, Map[String, Seq[Int]])] =
-      scans.map { case (n, xs) => n -> ScanAudit.groupWidths(xs) }
+    // intact while multiplying bytes read at 100 TB. Same execution pass
+    // as the scan budget — this pins the same final adaptive plans.
     def fmtW(m: Map[String, Seq[Int]]): String =
       m.toSeq.sortBy(_._1).map { case (t, ws) => s"$t:${ws.mkString("+")}" }.mkString(",")
-    if (sys.env.contains("SPARK_GRAFT_UPDATE_READ_WIDTH")) {
-      val lines = ("# query\ttable:width[+width...],... — pruned data-column count of each" +
-        " live scan, final adaptive plan at sf0.001; regenerate with" +
-        " SPARK_GRAFT_UPDATE_READ_WIDTH=1 sbt 'Test/testOnly graft.ScanBudgetSpec'") +:
-        widths.map { case (n, m) => s"$n\t${fmtW(m)}" }
-      Files.createDirectories(widthPath.getParent)
-      Files.write(widthPath, lines.asJava)
-      info(s"rewrote $widthPath with ${widths.size} entries")
-    }
-    assert(Files.exists(widthPath),
-      s"$widthPath missing — run once with SPARK_GRAFT_UPDATE_READ_WIDTH=1 to seed it")
-    val expectedW: Map[String, String] = Files.readAllLines(widthPath).asScala
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l => val f = l.split("\t", 2); f(0) -> (if (f.length > 1) f(1) else "") }.toMap
-    val missingW = widths.map(_._1).filterNot(expectedW.contains)
-    val staleW = expectedW.keys.toSeq.filterNot(widths.map(_._1).contains)
-    val driftedW = widths.flatMap { case (n, m) =>
-      expectedW.get(n).collect { case e if e != fmtW(m) => s"$n: '$e' -> '${fmtW(m)}'" }
-    }
-    assert(missingW.isEmpty && staleW.isEmpty && driftedW.isEmpty,
-      s"""Read-width drift — a scan's pruned column set changed (intentional? regenerate
-         |the golden file and justify in the commit; a WIDER scan multiplies bytes read
-         |at 100 TB):
-         |  unbudgeted queries: ${missingW.mkString(", ")}
-         |  stale budget rows:  ${staleW.mkString(", ")}
-         |  drifted widths:
-         |    ${driftedW.mkString("\n    ")}""".stripMargin)
+    assertMatchesBudget(widthPath,
+      "Read-width (a scan's pruned column set changed; a WIDER scan multiplies bytes read at 100 TB)",
+      "table:width[+width...],... — pruned data-column count of each live scan, " +
+        "final adaptive plan at sf0.001",
+      scans.map { case (n, xs) => n -> fmtW(ScanAudit.groupWidths(xs)) })
 
     val repeats = actual.flatMap { case (n, m) =>
       m.collect {
@@ -203,23 +169,5 @@ class ScanBudgetSpec extends SparkSpec {
     }
     assert(staleExceptions.isEmpty,
       s"exception entries no longer needed (repeat gone — remove them): ${staleExceptions.mkString(", ")}")
-
-    assert(Files.exists(budgetPath),
-      s"$budgetPath missing — run once with SPARK_GRAFT_UPDATE_SCAN_BUDGET=1 to seed it")
-    val expected: Map[String, String] = Files.readAllLines(budgetPath).asScala
-      .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-      .map { l => val f = l.split("\t", 2); f(0) -> (if (f.length > 1) f(1) else "") }.toMap
-
-    val missing = actual.map(_._1).filterNot(expected.contains)
-    val stale = expected.keys.toSeq.filterNot(actual.map(_._1).contains)
-    val drifted = actual.flatMap { case (n, m) =>
-      expected.get(n).collect { case e if e != fmt(m) => s"$n: '$e' -> '${fmt(m)}'" }
-    }
-    assert(missing.isEmpty && stale.isEmpty && drifted.isEmpty,
-      s"""Scan budget drift (intentional? regenerate the golden file and justify in the commit):
-         |  unbudgeted queries: ${missing.mkString(", ")}
-         |  stale budget rows:  ${stale.mkString(", ")}
-         |  drifted counts:
-         |    ${drifted.mkString("\n    ")}""".stripMargin)
   }
 }

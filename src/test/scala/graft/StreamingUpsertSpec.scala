@@ -34,7 +34,7 @@ class StreamingUpsertSpec extends SparkSpec {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
-    val q = StreamingUpsert.start(agg, url, "user_totals", Seq("user_id"))
+    val q = StreamingUpsert.upsertSink(agg, url, "user_totals", Seq("user_id")).start()
 
     val (a, b) = rows.splitAt(200)
     stream.addData(a.toIndexedSeq); q.processAllAvailable()
